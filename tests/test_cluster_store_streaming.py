@@ -128,6 +128,110 @@ def test_store_uncommitted_write_is_invisible(spark):
         shutil.rmtree(root)
 
 
+def _jobs_in_group(spark, group, fn):
+    """(number of Spark jobs ``fn()`` fired, its result)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_store_commit_leaves_no_persisted_rdds(spark, tmp_path):
+    from trajlib_spark.sources.store import TableStore, run_stages
+
+    store = TableStore(str(tmp_path))
+    stages = [(f"s{i}", lambda sp, st, n=n: sp.range(n)) for i, n in enumerate((10, 20, 0))]
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    run_stages(spark, store, stages)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+def test_store_save_is_one_write_and_load_runs_no_job(spark, tmp_path):
+    from trajlib_spark.sources.store import TableStore
+
+    store = TableStore(str(tmp_path))
+    df = spark.range(0, 100, 1, 4).withColumn("x", F.col("id") * 0.5)
+    n_save, _ = _jobs_in_group(spark, "store-save", lambda: store.save(df, "t"))
+    assert n_save <= 2  # the snapshot write + the lineage append
+    n_load, got = _jobs_in_group(spark, "store-load", lambda: store.load(spark, "t"))
+    assert n_load == 0
+    # the manifest's schema is the one footer inference would give
+    assert got.schema == spark.read.parquet(got.inputFiles()[0]).schema
+    assert got.count() == 100
+
+
+def test_store_lineage_numbers_written_files_in_uri_order(spark, tmp_path):
+    """One lineage row per non-empty data file, numbered in the order of the
+    file URIs ``input_file_name()`` reports — the URI percent-escapes the
+    partition values, which reorders "a b" (%20) after "a!"."""
+    import json
+    import os
+
+    from trajlib_spark.sources.store import TableStore
+
+    src = str(tmp_path / "src")
+    values = F.array(*[F.lit(v) for v in ("a b", "a!", "50%", "x/y", "é")])
+    spark.range(0, 1000, 1, 3).withColumn(
+        "k", F.element_at(values, (F.col("id") % 5 + 1).cast("int"))
+    ).write.parquet(src)
+    inp = spark.read.parquet(src)
+    store = TableStore(str(tmp_path / "store"))
+    store.save(inp.repartition(5, "id"), "multi")
+    store.save(inp, "part", partition_by=["k"])
+    store.save(inp.where("id < 0"), "empty")
+    store.save(inp.where("id < 0"), "part_empty", partition_by=["k"])
+
+    lin = store.lineage(spark)
+    input_files = sorted(inp.inputFiles())
+    for table, n_files, n_rows in (
+        ("multi", 5, 1000), ("part", 15, 1000), ("empty", 0, 0), ("part_empty", 0, 0)
+    ):
+        per_file = sorted(
+            store.load(spark, table)
+            .groupBy(F.input_file_name().alias("f")).count().collect()
+        )
+        want = [(table, i, r["count"], input_files) for i, r in enumerate(per_file)]
+        got = sorted(
+            (r.stage, r.partition_id, r.row_count, r.input_files)
+            for r in lin.where(F.col("stage") == table).collect()
+        )
+        assert got == want and len(got) == n_files, table
+        with open(os.path.join(store.root, table, "_manifest.json")) as f:
+            assert json.load(f)["row_count"] == n_rows
+
+
+def test_store_failed_save_keeps_previous_snapshot(spark, tmp_path):
+    """A write that dies partway leaves the committed snapshot readable and
+    correct, and the next save commits over it."""
+    import json
+    import os
+
+    from trajlib_spark.sources.store import TableStore
+
+    store = TableStore(str(tmp_path))
+    store.save(spark.range(0, 10, 1, 2), "t")
+    boom = spark.range(0, 1000, 1, 4).select(
+        F.when(F.col("id") == 900, F.raise_error(F.lit("injected failure")))
+        .otherwise(F.col("id")).alias("id")
+    )
+    with pytest.raises(Exception, match="injected failure"):
+        store.save(boom, "t")
+
+    assert store.exists("t")
+    assert sorted(r.id for r in store.load(spark, "t").collect()) == list(range(10))
+    with open(os.path.join(store.root, "t", "_manifest.json")) as f:
+        assert json.load(f)["row_count"] == 10
+
+    store.save(spark.range(0, 20, 1, 2), "t")
+    assert store.load(spark, "t").count() == 20
+    # superseded and crashed commit directories are gone
+    assert len(os.listdir(os.path.join(store.root, "t", "data"))) == 1
+
+
 def test_streaming_sessionizer(spark, tmp_path):
     import pandas as pd
 
