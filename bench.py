@@ -560,8 +560,6 @@ _SF1_STAGE_SRC: dict[str, list[str]] = {
                    "trajlib_spark/operators/cells.py"],
     "walks50": ["trajlib_spark/operators/walks.py",
                 "trajlib_spark/operators/cells.py"],
-    "walks50_arrow": ["trajlib_spark/operators/walks.py",
-                      "trajlib_spark/operators/cells.py"],
     "skipgrams50": ["trajlib_spark/operators/walks.py"],
     "dedup_components_chain": ["trajlib_spark/operators/dedup.py"],
 }
@@ -701,25 +699,18 @@ def sf1_pilot(sf_dir: str, cpus: int) -> dict:
         spark.catalog.clearCache()
 
         # 6) the REFERENCE walk config (node2vec_.py:19-29: walk_length 50,
-        # walks_per_node 10, context 10) — the 49-join walk chain and the
-        # slice-bounded skip-gram fan at their real shape (VERDICT r4 #3).
-        # Walks are checkpointed untimed-out of the skip-gram window so the
-        # two stages attribute separately.
+        # walks_per_node 10, context 10) — the walks and the slice-bounded
+        # skip-gram fan at their real shape (VERDICT r4 #3). Walks are
+        # checkpointed untimed-out of the skip-gram window so the two
+        # stages attribute separately.
         with _pilot_stage(out, "walks50", cpus):
             walks50 = walk_ops.node2vec_walks(
-                pairs, starts, walk_length=50, walks_per_node=10,
-                impl="catalyst",
+                pairs, starts, walk_length=50, walks_per_node=10
             )
-            # checkpoint IS the timed materialization of the 49-join chain;
-            # the count then reads the checkpoint blocks, not a re-run
+            # checkpoint IS the timed materialization of the walks; the
+            # count then reads the checkpoint blocks, not a re-run
             w50 = walks50.localCheckpoint(eager=True)
         out["walks50_rows"] = int(w50.count())
-        # the broadcast-adjacency Arrow fast path at the same shape
-        # (bit-identical walks; the right plan for metadata-scale graphs)
-        with _pilot_stage(out, "walks50_arrow", cpus):
-            wa = walk_ops.node2vec_walks(pairs, starts, walk_length=50,
-                                         walks_per_node=10, impl="arrow")
-            out["walks50_arrow_rows"], _ = _run_and_count_big(wa)
         with _pilot_stage(out, "skipgrams50", cpus):
             sg = walk_ops.skipgram_pairs(w50, window=10)
             out["skipgrams50_rows"], out["skipgrams50_skew_splits"] = (
@@ -731,7 +722,7 @@ def sf1_pilot(sf_dir: str, cpus: int) -> dict:
         # 7) connected components in the pathological path-shaped regime
         # (VERDICT r4 #5): a 100k-node chain, diameter 99 999 — plain
         # propagation would need one round per hop; pointer jumping
-        # (dedup.connected_components jump=True) must close it in
+        # (dedup.connected_components) must close it in
         # ~log2(n) rounds. Rounds and wall time recorded.
         chain = spark.range(99_999).select(
             F.col("id").alias("i"), (F.col("id") + 1).alias("j")

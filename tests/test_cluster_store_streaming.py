@@ -390,30 +390,6 @@ def test_multimodal_real_decode_features(spark):
     assert ppm == bmp
 
 
-def test_salted_count_equivalence(spark, points):
-    from trajlib_spark.operators import raster
-    from trajlib_spark.config import PORTO_GRID
-
-    plain = raster.tile_counts(points, PORTO_GRID, zooms=(0, 2)).orderBy(
-        "zoom", "i_x", "i_y"
-    ).collect()
-    salted = raster.tile_counts(points, PORTO_GRID, zooms=(0, 2), salt=8).orderBy(
-        "zoom", "i_x", "i_y"
-    ).collect()
-    assert plain == salted
-
-
-def test_hot_keys_and_salting(spark):
-    from trajlib_spark.operators import skew
-
-    rows = [(1,)] * 900 + [(k,) for k in range(2, 102)]
-    df = spark.createDataFrame(rows, "k long")
-    hot = [r.k for r in skew.hot_keys(df, "k", threshold_frac=0.5).collect()]
-    assert hot == [1]
-    out = {r.k: r.cnt for r in skew.salted_count(df, ["k"], salt=8).collect()}
-    assert out[1] == 900 and out[50] == 1
-
-
 def test_streaming_stay_collapse(spark, tmp_path):
     import pandas as pd
 

@@ -33,6 +33,40 @@ def test_miner_finds_mentions_in_order():
     assert got == [(41.15, -8.6), (40.0, -8.1)]  # 6-decimal mentions only
 
 
+def test_jvm_miner_matches_canonical_miner(spark):
+    """pages_to_points' regexp_extract_all miner finds exactly the
+    mentions mine_coordinates_py finds, in the same order, on every page
+    shape: null text, no mentions, negative coordinates, 5-decimal decoys
+    and a 4-digit integer part."""
+    import datetime as dt
+
+    texts = [
+        None,
+        "no coordinates here at all",
+        "start 41.150000, -8.600000 then -33.868820, -151.209296 end",
+        "decoys 41.15000, -8.60000 and 41.1500, -8.6000 only",
+        "wide 1234.567890, 12.345678 and -1234.567890, -12.345678",
+        "mixed 41.15000, -8.600000 x 40.000001, 8.100000, 7.000000, 1.000000",
+        "tight 0.000000, 0.000000,1.000000, 2.000000 -0.000001, -0.000002",
+    ]
+    ts = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    pg = spark.createDataFrame(
+        [(f"u{k}", ts, b"", t, "en") for k, t in enumerate(texts)],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    got = sorted(
+        (r.url, r.pos, r.lat, r.lon)
+        for r in extract.pages_to_points(pg, bbox_filter=False).collect()
+    )
+    want = sorted(
+        (f"u{k}", pos, la, lo)
+        for k, t in enumerate(texts)
+        for pos, (la, lo) in enumerate(extract.mine_coordinates_py(t or ""))
+    )
+    assert got == want
+    assert len(want) >= 8  # the fixture really exercises the miner
+
+
 def test_pages_deterministic(spark):
     a = pages_src.generate_pages(spark, 100).orderBy("url").collect()
     b = pages_src.generate_pages(spark, 100).orderBy("url").collect()

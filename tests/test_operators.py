@@ -159,6 +159,32 @@ def test_pip_degenerate_polygons(spark, points):
     assert counts.get(100, 0) >= 0  # sliver handled without error
 
 
+def test_pip_skips_polygons_without_edges(spark, points):
+    """A polygon row with an empty coord, or whose rings all have fewer
+    than 2 points, has no edge: the index build skips it (no coverage)
+    and the other polygons' pip rows are unchanged."""
+    square = [[G.x_min, G.y_min], [G.x_max, G.y_min], [G.x_max, G.y_max],
+              [G.x_min, G.y_max], [G.x_min, G.y_min]]
+    schema = "geo_id long, type string, coord array<array<array<double>>>"
+    normal = spark.createDataFrame([(1, "polygon", [square])], schema)
+    mixed = spark.createDataFrame(
+        [
+            (1, "polygon", [square]),
+            (2, "polygon", []),
+            (3, "polygon", [[[G.x_min + 9.0, G.y_min + 9.0]], []]),
+        ],
+        schema,
+    )
+
+    def rows(polys):
+        out = spatial_join.point_in_polygon(points, polys, G, point_cols=["point_id"])
+        return sorted(map(tuple, out.collect()))
+
+    want = rows(normal)
+    assert want  # the normal polygon covers points
+    assert rows(mixed) == want
+
+
 def test_raster_roundtrip_and_pyramid(spark, points):
     tc = raster.tile_counts(points, G, zooms=(0, 1, 2))
     # pyramid consistency: direct assignment on the zoom-2 grid == rollup

@@ -33,77 +33,52 @@ def test_walks_match_python_replica(spark, pairs):
     assert len(got) == 4 * 3 * 8
 
 
-def test_arrow_walks_bit_identical_to_join_chain(spark, pairs):
-    """The broadcast-adjacency Arrow fast path must emit exactly the same
-    (walk_id, pos, cell_id) rows as the join-chain implementation — same
-    sorted-neighbor ordering, same integer hash chooser."""
-    starts = spark.createDataFrame(
-        [(5,), (100,), (2481,), (7000,)], "cell_id long"
-    )
-    chain = sorted(
-        (r.walk_id, r.pos, r.cell_id)
-        for r in walks.node2vec_walks(pairs, starts, 10, 3, impl="catalyst").collect()
-    )
-    arrow = sorted(
-        (r.walk_id, r.pos, r.cell_id)
-        for r in walks.node2vec_walks(pairs, starts, 10, 3, impl="arrow").collect()
-    )
-    assert arrow == chain
-    with pytest.raises(ValueError):
-        walks.node2vec_walks(pairs, starts, 4, 1, impl="nope")
-
-
 def test_dead_end_walks_dropped_identically(spark):
     """A degree-0 start node (absent from the edge list — the only
     dead-end shape an undirected adjacency admits) drops its walks
-    ENTIRELY in every implementation: the chain loses the row at the
-    step-1 inner join, and the arrow/python paths enforce the same rule,
-    so the bit-identical guarantee is unconditional (ADVICE r5)."""
+    ENTIRELY, exactly like the python replica (ADVICE r5)."""
     tiny = spark.createDataFrame(
         [(1, 2), (2, 3)], "src_cell long, dst_cell long"
     )
     starts = spark.createDataFrame([(1,), (99,)], "cell_id long")
-    chain = sorted(
-        map(tuple, walks.node2vec_walks(tiny, starts, 5, 2, impl="catalyst").collect())
-    )
-    arrow = sorted(
-        map(tuple, walks.node2vec_walks(tiny, starts, 5, 2, impl="arrow").collect())
-    )
+    got = sorted(map(tuple, walks.node2vec_walks(tiny, starts, 5, 2).collect()))
     py = sorted(walks.walks_py([(1, 2), (2, 3)], [1, 99], 5, 2))
-    assert chain == arrow == py
+    assert got == py
     # node 99's walks are gone entirely — even pos 0
-    assert all(r[0] // 2 != 99 for r in chain)
+    assert all(r[0] // 2 != 99 for r in got)
     # node 1's walks survive at full length
-    assert len(chain) == 2 * 5
-
-
-def test_auto_impl_selection(spark, pairs):
-    """impl='auto' takes the broadcast-arrow path for metadata-scale
-    graphs (no join in the plan) and falls back to the catalyst chain
-    when the edge list exceeds max_broadcast_edges."""
-    starts = spark.createDataFrame([(42,)], "cell_id long")
-    auto_plan = (
-        walks.node2vec_walks(pairs, starts, 5, 1)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" not in auto_plan  # arrow: one Arrow pass
-    chain_plan = (
-        walks.node2vec_walks(pairs, starts, 5, 1, max_broadcast_edges=0)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in chain_plan
+    assert len(got) == 2 * 5
 
 
 def test_walks_plan_shape(spark, pairs):
-    """All walk-step joins are broadcast hash joins (the cell graph is
-    metadata-scale); no cross join, no shuffle join in the chain."""
+    """Walks are generated in one Arrow pass over a broadcast adjacency:
+    no join of any kind in the plan."""
     starts = spark.createDataFrame([(42,), (99,)], "cell_id long")
-    out = walks.node2vec_walks(pairs, starts, 6, 2, impl="catalyst")
+    out = walks.node2vec_walks(pairs, starts, 6, 2)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    assert "Join" not in plan and "CartesianProduct" not in plan, plan
+    assert "MapInPandas" in plan, plan
+
+
+def test_walks_edge_list_bound(spark, pairs, monkeypatch):
+    """The driver-side edge collect is bounded: an edge list above
+    _MAX_EDGES raises ValueError, and at most _MAX_EDGES + 1 rows ever
+    reach the driver."""
+    cls = type(pairs)  # the concrete DataFrame class the operator sees
+    collected: list[int] = []
+    to_pandas = cls.toPandas
+
+    def spy(self):
+        pdf = to_pandas(self)
+        collected.append(len(pdf))
+        return pdf
+
+    monkeypatch.setattr(cls, "toPandas", spy)
+    monkeypatch.setattr(walks, "_MAX_EDGES", 5)
+    starts = spark.createDataFrame([(42,)], "cell_id long")
+    with pytest.raises(ValueError, match="edge list exceeds 5"):
+        walks.node2vec_walks(pairs, starts, 6, 2)
+    assert collected and max(collected) <= 5 + 1, collected
 
 
 def test_walks_follow_edges_and_are_deterministic(spark, pairs):
@@ -186,43 +161,6 @@ def test_skipgram_window_ten_covers_reference_context(spark, pairs):
     n = walks.skipgram_pairs(w, window=10).count()
     # ordered pairs within |Δpos| ≤ 10 among 12 positions: 12·11 − 2
     assert n == 12 * 11 - 2
-
-
-def test_auto_walks_bit_identical_with_precollected_rows(spark, pairs):
-    """auto mode feeds its single bounded Arrow collect straight into the
-    arrow adjacency (ADVICE r6 / VERDICT r7 #1) — output stays
-    bit-identical to both explicit impls."""
-    starts = spark.createDataFrame([(7,), (42,), (99,)], "cell_id long")
-    a = sorted(map(tuple, walks.node2vec_walks(pairs, starts, 8, 2).collect()))
-    b = sorted(map(tuple, walks.node2vec_walks(
-        pairs, starts, 8, 2, impl="arrow").collect()))
-    c = sorted(map(tuple, walks.node2vec_walks(
-        pairs, starts, 8, 2, impl="catalyst").collect()))
-    assert a == b == c and len(a) == 3 * 2 * 8
-
-
-def test_auto_catalyst_branch_never_materializes_edges(spark, pairs, monkeypatch):
-    """VERDICT r7 #1: when auto mode's bounded probe says "too big for the
-    broadcast", the branch decision must be a scalar count — NO edge rows
-    may reach the driver (the old form collected max_broadcast_edges+1
-    Row objects precisely on the graphs too big to broadcast). Spy:
-    DataFrame.collect/toPandas raise for the duration of the auto call
-    with a bound of 0; the catalyst chain must still come back lazily."""
-    from pyspark.sql import DataFrame
-
-    starts = spark.createDataFrame([(42,)], "cell_id long")
-
-    def _boom(self, *a, **k):  # pragma: no cover - failure path
-        raise AssertionError("driver materialization on the catalyst branch")
-
-    monkeypatch.setattr(DataFrame, "collect", _boom)
-    monkeypatch.setattr(DataFrame, "toPandas", _boom)
-    out = walks.node2vec_walks(pairs, starts, 6, 2, max_broadcast_edges=0)
-    monkeypatch.undo()
-    got = sorted(map(tuple, out.collect()))
-    want = sorted(map(tuple, walks.node2vec_walks(
-        pairs, starts, 6, 2, impl="catalyst").collect()))
-    assert got == want and len(got) == 2 * 6
 
 
 def test_skipgram_pairs_raise_on_duplicate_positions(spark, pairs):

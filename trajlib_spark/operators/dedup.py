@@ -205,7 +205,7 @@ def ngram_jaccard_verify(
                 return v
 
             for pdf in batches:
-                if not len(pdf):
+                if not len(pdf) or not tm:  # no docs: inner join keeps no pair
                     continue
                 ii = pdf["i"].to_numpy()
                 jj = pdf["j"].to_numpy()
@@ -500,7 +500,7 @@ def embedding_near_dups(
 
 def connected_components(
     pairs: DataFrame, i: str = "i", j: str = "j", max_iter: int = 25,
-    jump: bool = True, stats: dict | None = None,
+    stats: dict | None = None,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``pairs``: component
     = the smallest node id reachable over the undirected pair edges — the
@@ -560,27 +560,27 @@ def connected_components(
             .groupBy("node")
             .agg(F.min("label").alias("label"))
         )
-        pre_jump = None
-        if jump:
-            # pointer jump: label ← min(label, label(label)). label is
-            # always a node of the same component (it entered via an edge
-            # or a previous jump), so the jump target exists in cand and
-            # reachability is preserved while path distances halve.
-            # Checkpoint first — the self-join reads cand twice and would
-            # otherwise re-run the neighbor-min stage both times.
-            pre_jump = cand.localCheckpoint(eager=True)
-            hop = pre_jump.select(
-                F.col("node").alias("label"), F.col("label").alias("_l2")
-            )
-            cand = pre_jump.join(hop, "label", "left").select(
+        # pointer jump: label ← min(label, label(label)). label is always
+        # a node of the same component (it entered via an edge or a
+        # previous jump), so the jump target exists in cand and
+        # reachability is preserved while path distances halve.
+        # Checkpoint first — the self-join reads cand twice and would
+        # otherwise re-run the neighbor-min stage both times.
+        pre_jump = cand.localCheckpoint(eager=True)
+        hop = pre_jump.select(
+            F.col("node").alias("label"), F.col("label").alias("_l2")
+        )
+        new_labels = (
+            pre_jump.join(hop, "label", "left")
+            .select(
                 "node",
                 F.least(F.col("label"), F.coalesce("_l2", "label")).alias("label"),
             )
-        new_labels = cand.localCheckpoint(eager=True)
+            .localCheckpoint(eager=True)
+        )
         new = new_labels.agg(F.sum("label")).collect()[0][0]
         labels.unpersist()  # checkpoint blocks of the superseded round
-        if pre_jump is not None:
-            pre_jump.unpersist()  # the intermediate pre-jump checkpoint
+        pre_jump.unpersist()  # the intermediate pre-jump checkpoint
         labels = new_labels
         if new == cur:
             converged = True

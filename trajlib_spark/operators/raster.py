@@ -33,7 +33,6 @@ def tile_counts(
     zooms: tuple[int, ...] = (0, 1, 2, 3),
     x: str = "x",
     y: str = "y",
-    salt: int = 0,
 ) -> DataFrame:
     """(zoom, i_x, i_y, cell_id, cnt) per pyramid level, built as a
     HIERARCHICAL rollup: the source is scanned exactly once for the finest
@@ -46,16 +45,7 @@ def tile_counts(
         cells.x_idx(F.col(x), F.col(y), grid).alias("bx"),
         cells.y_idx(F.col(x), F.col(y), grid).alias("by"),
     )
-    if salt and salt > 1:
-        # two-phase salted count for pathologically hot cells (a plain
-        # count groupBy is usually fine — map-side partial aggregation
-        # already collapses hot keys — but callers seeing reducer skew can
-        # spread each key over `salt` reducers explicitly)
-        from . import skew
-
-        base = skew.salted_count(idx, ["bx", "by"], salt=salt)
-    else:
-        base = idx.groupBy("bx", "by").agg(F.count(F.lit(1)).alias("cnt"))
+    base = idx.groupBy("bx", "by").agg(F.count(F.lit(1)).alias("cnt"))
     # Round 9: the per-level chained rollups (each its own exchange +
     # stage, run back-to-back) collapse into ONE explode + ONE aggregate:
     # every base cell emits its (zoom, i_x >> z, i_y >> z) row per level,

@@ -177,7 +177,14 @@ def point_in_polygon(
 
     out_gid, out_cell, out_full = [], [], []
     for r in polygons.select("geo_id", "coord").collect():
-        gid, coord = r["geo_id"], r["coord"]
+        gid, coord = r["geo_id"], r["coord"] or []
+        segs = []
+        for ring in coord:
+            R = np.array([np.asarray(p, dtype=np.float64) for p in ring])
+            if len(R) >= 2:
+                segs.append((R[:-1], R[1:]))
+        if not segs:
+            continue  # degenerate polygon (no edge): it covers no cell
         pts_all = np.array(
             [p for ring in coord for p in ring], dtype=np.float64
         )
@@ -190,11 +197,6 @@ def point_in_polygon(
             np.arange(ix_lo, ix_hi + 1, dtype=np.int64)[:, None] * y_size
             + np.arange(iy_lo, iy_hi + 1, dtype=np.int64)[None, :]
         ).ravel()
-        segs = []
-        for ring in coord:
-            R = np.array([np.asarray(p, dtype=np.float64) for p in ring])
-            if len(R) >= 2:
-                segs.append((R[:-1], R[1:]))
         A = np.concatenate([a for a, _ in segs])
         B = np.concatenate([b for _, b in segs])
         ax, ay, bx, by = A[:, 0], A[:, 1], B[:, 0], B[:, 1]

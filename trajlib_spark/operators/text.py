@@ -377,7 +377,6 @@ def _per_doc_token_counts(
 
 def trigram_lm_score(
     docs: DataFrame, text: str = "text", id_col: str = "doc_id",
-    cache_trigrams: bool = True,
 ) -> DataFrame:
     """Statistical quality scoring: mean character-trigram log-probability
     under a model trained on the corpus itself — the relational core of
@@ -393,12 +392,10 @@ def trigram_lm_score(
     values). The model table is vocabulary-bounded (≤ charset³ rows,
     here ASCII ≈ bounded thousands) and broadcastable.
 
-    ``cache_trigrams=True`` persists the per-doc count table so the
-    corpus is scanned once (cache ≈ distinct-(doc,tri) rows, already
-    smaller than the raw trigram stream by the repetition factor);
-    ``False`` selects the two-scan mode — nothing but the model is kept,
-    the right trade when even the count table dwarfs cluster memory at
-    extreme corpus scale. Output: (doc_id, n_trigrams, lm_score_r),
+    The per-doc count table is persisted so the corpus is scanned once
+    (cache ≈ distinct-(doc,tri) rows, already smaller than the raw
+    trigram stream by the repetition factor). Output:
+    (doc_id, n_trigrams, lm_score_r),
     score rounded to 6 dp so a 1-ulp ln() divergence between engines
     cannot change what an oracle sees.
 
@@ -408,9 +405,7 @@ def trigram_lm_score(
     row per character of the corpus through a 15M-row aggregation at
     sf1.0 for the same integer counts. Everything float (the ln() scoring
     join and both final aggregates) is untouched Catalyst."""
-    per_doc = _per_doc_trigram_counts(docs, text=text, id_col=id_col)
-    if cache_trigrams:
-        per_doc = per_doc.persist()
+    per_doc = _per_doc_trigram_counts(docs, text=text, id_col=id_col).persist()
     model = per_doc.groupBy("tri").agg(F.sum("_k").alias("cnt")).persist()
     total = model.agg(F.sum("cnt")).collect()[0][0]
     scored = per_doc.join(F.broadcast(model), "tri").select(

@@ -8,49 +8,27 @@ the data-pipeline half of that operator — generated here distributed and
 deterministically; the SGD embedding training itself stays a documented
 non-goal (torch is not in this environment, SURVEY §7.3).
 
-Plan shape: the undirected adjacency gets a per-source neighbor ordinal
-(row_number by dst) and a degree column; each walk step is one equi-join
-of the walk frontier against the adjacency on (src, chosen ordinal),
-where the choice is a deterministic integer hash of (walk_id, step) mod
-degree — no RNG state, any executor layout reproduces the same walks.
-walk_length − 1 joins total; every stage is partition-parallel.
+Plan shape: the undirected adjacency (sorted neighbor list per node) is
+collected once and broadcast; every walk is generated in one Arrow pass
+over the start nodes. Each step's neighbor choice is a deterministic
+integer hash of (walk_id, step) mod degree — no RNG state, any executor
+layout reproduces the same walks.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# deterministic chooser: pmod(walk_id·A + step·B + C, M) stays far inside
-# int64 for any realistic walk_id (≤ ~9e5 · A)
+# deterministic chooser: (walk_id·A + step·B + C) mod M — the same integer
+# hash in node2vec_walks, walks_py and the SQL oracle
 _HASH_A = 1000003
 _HASH_B = 7919
 _HASH_C = 12345
 _HASH_M = 2147483647
 
-
-def _chooser(walk_id, step: int):
-    return F.pmod(
-        walk_id * F.lit(_HASH_A) + F.lit(step * _HASH_B + _HASH_C), F.lit(_HASH_M)
-    )
-
-
-def indexed_adjacency(pairs: DataFrame) -> DataFrame:
-    """(src, dst, ordinal, degree) from the once-per-pair edge list
-    (cells.neighbour_cell_pairs): undirected → both directions, neighbor
-    ordinal = rank by dst (deterministic), degree per src. The window
-    partitions by src — partition-parallel at any graph size."""
-    und = pairs.select(
-        F.col("src_cell").alias("src"), F.col("dst_cell").alias("dst")
-    ).unionAll(
-        pairs.select(F.col("dst_cell").alias("src"), F.col("src_cell").alias("dst"))
-    )
-    w = Window.partitionBy("src").orderBy("dst")
-    return und.select(
-        "src", "dst",
-        (F.row_number().over(w) - 1).alias("ordinal"),
-        F.count(F.lit(1)).over(Window.partitionBy("src")).alias("degree"),
-    )
+# driver-side bound on the collected edge list (the broadcast adjacency)
+_MAX_EDGES = 4_000_000
 
 
 def node2vec_walks(
@@ -59,110 +37,28 @@ def node2vec_walks(
     walk_length: int = 12,
     walks_per_node: int = 2,
     node_col: str = "cell_id",
-    impl: str = "auto",
-    max_broadcast_edges: int = 4_000_000,
 ) -> DataFrame:
     """→ (walk_id, pos, cell_id): ``walks_per_node`` uniform walks of
     ``walk_length`` positions from every start node (p = q = 1, the
     reference's config). walk_id = node·walks_per_node + w. A walk that
-    hits a dead end (degree-0 node) is DROPPED entirely — all impls
-    agree on this (the join chain loses the row at the failed step; the
-    arrow/python paths enforce the same rule), so the bit-identical
-    claim below holds on any graph, dead ends included.
+    hits a dead end (degree-0 node) is DROPPED entirely.
 
-    ``impl='catalyst'`` chains walk_length−1 broadcast map-side joins —
-    fully general, but each step is a scheduled stage, so long walks pay
-    ~linear fixed cost (the sf1 pilot measured ~1.6 s/step at length
-    50). ``impl='arrow'`` broadcasts the adjacency (sorted-neighbor
-    dict) and generates every walk in ONE Arrow pass over the start-node
-    partitions — bit-identical output (same integer hash chooser), the
-    right plan when the graph is metadata-scale (bounded by the grid,
-    not the data), which the cell graph always is (6.7–25× at the
-    reference walk shape, VERDICT r5). ``impl='auto'`` (default)
-    decides the branch with a CollectLimit-bounded COUNT over the
-    edge-list plan — a scalar, so the catalyst verdict ("too big")
-    ships zero rows to the driver (VERDICT r7 #1: the previous bounded
-    Row-collect materialized up to ``max_broadcast_edges``+1 driver
-    Rows precisely on data-scale graphs). Only the arrow branch
-    re-evaluates, once, via Arrow ``toPandas`` — that plan is ≤ the
-    bound by construction, so the re-evaluation is the cheap
-    CollectLimit shape and the single-expensive-evaluation property
-    (ADVICE r6) is preserved. The grid cell graph is always far below
-    the bound; data-scale graphs that would blow the broadcast stay on
-    the chain (whose per-step joins re-read the — typically stored —
-    edge list)."""
-    if impl == "auto":
-        # Branch decision: a CollectLimit-bounded COUNT — scalar result,
-        # no driver row materialization (VERDICT r7 #1: the previous
-        # bounded Row-collect put up to max_broadcast_edges+1 Python Row
-        # objects on the driver precisely when the answer was "too big").
-        # The catalyst branch therefore evaluates the edge-list plan once
-        # (this count) and never ships a row to the driver. The arrow
-        # branch re-evaluates once more via Arrow toPandas — but that
-        # plan is ≤ max_broadcast_edges rows BY CONSTRUCTION, so the
-        # second evaluation is the cheap CollectLimit shape, and Arrow
-        # batches cut per-row transfer overhead ~10× vs Row objects.
-        probe = pairs.select("src_cell", "dst_cell").limit(max_broadcast_edges + 1)
-        if probe.count() <= max_broadcast_edges:
-            return _walks_arrow(
-                pairs, start_nodes, walk_length, walks_per_node, node_col,
-                edge_pdf=probe.toPandas(),
-            )
-        impl = "catalyst"
-    if impl == "arrow":
-        return _walks_arrow(pairs, start_nodes, walk_length, walks_per_node, node_col)
-    if impl != "catalyst":
-        raise ValueError(f"impl must be auto | catalyst | arrow, got {impl!r}")
-    # broadcasting the adjacency turns all walk_length−1 joins into
-    # map-side hash joins that pipeline in one linear chain. The path
-    # accumulates as an ARRAY column and explodes once at the end — a
-    # per-step union would re-evaluate each prefix chain (O(L²) joins
-    # total). A walk reaching a degree-0 node vanishes at that step's
-    # inner join — the dropped-walk rule documented above.
-    adj = F.broadcast(indexed_adjacency(pairs).persist())
-    starts = start_nodes.select(F.col(node_col).cast("long").alias("cur"))
-    frontier = starts.select(
-        F.explode(
-            F.sequence(
-                F.col("cur") * walks_per_node,
-                F.col("cur") * walks_per_node + (walks_per_node - 1),
-            )
-        ).alias("walk_id"),
-        "cur",
-    ).withColumn("path", F.array("cur"))
-    for step in range(1, walk_length):
-        frontier = (
-            frontier.join(adj.withColumnRenamed("src", "cur"), "cur")
-            .where(F.col("ordinal") == _chooser(F.col("walk_id"), step) % F.col("degree"))
-            .select(
-                "walk_id",
-                F.col("dst").alias("cur"),
-                F.concat("path", F.array("dst")).alias("path"),
-            )
-        )
-    return frontier.select(
-        "walk_id", F.posexplode("path").alias("pos", node_col)
-    ).select("walk_id", F.col("pos").cast("long").alias("pos"), node_col)
-
-
-def _walks_arrow(
-    pairs: DataFrame,
-    start_nodes: DataFrame,
-    walk_length: int,
-    walks_per_node: int,
-    node_col: str,
-    edge_pdf=None,
-) -> DataFrame:
-    """One-pass walk generation over a broadcast adjacency — see
-    node2vec_walks(impl='arrow'). The adjacency collect is bounded by the
-    GRAPH (metadata-scale for the grid cell graph), never by the data;
-    auto mode passes its already-collected ``edge_pdf`` (an Arrow-built
-    pandas frame) so the expensive edge-list evaluation never repeats."""
+    The edge list is collected once (Arrow ``toPandas``, bounded at
+    ``_MAX_EDGES`` + 1 rows) into a sorted-neighbor adjacency that is
+    broadcast to every executor; each walk is then generated in ONE Arrow
+    pass over the start-node partitions — no per-step join. The cell
+    graph is bounded by the grid, not the data (PORTO_GRID: 130,451
+    edges), so the collect is metadata-scale; an edge list above the
+    bound raises ValueError instead of loading the driver."""
     import pandas as pd
 
+    edge_pdf = pairs.select("src_cell", "dst_cell").limit(_MAX_EDGES + 1).toPandas()
+    if len(edge_pdf) > _MAX_EDGES:
+        raise ValueError(
+            f"node2vec_walks: edge list exceeds {_MAX_EDGES} rows — the "
+            "adjacency is broadcast and must stay metadata-scale"
+        )
     adj: dict[int, list[int]] = {}
-    if edge_pdf is None:
-        edge_pdf = pairs.select("src_cell", "dst_cell").toPandas()
     for s, d in zip(edge_pdf.iloc[:, 0].to_numpy(), edge_pdf.iloc[:, 1].to_numpy()):
         s, d = int(s), int(d)
         adj.setdefault(s, []).append(d)
@@ -194,11 +90,8 @@ def _walks_arrow(
                         h = (wid * _HASH_A + step * _HASH_B + _HASH_C) % _HASH_M
                         cur = nbrs[h % len(nbrs)]
                         path.append(cur)
-                    # dead-ended walk → dropped entirely, matching the
-                    # inner-join chain (which loses the row at the failed
-                    # step, earlier positions included)
                     if len(path) < walk_length:
-                        continue
+                        continue  # dead-ended walk → dropped entirely
                     out_w.extend([wid] * walk_length)
                     out_p.extend(range(walk_length))
                     out_c.extend(path)
@@ -319,6 +212,6 @@ def walks_py(pairs_rows, start_nodes, walk_length=12, walks_per_node=2):
                 cur = nbrs[h % len(nbrs)]
                 path.append(cur)
             if len(path) < walk_length:
-                continue  # dead-ended walk dropped — same rule as both
+                continue  # dead-ended walk dropped — same rule as node2vec_walks
             rows.extend((wid, p, c) for p, c in enumerate(path))
     return rows
